@@ -1,7 +1,8 @@
 """Hierarchy / graph operators (SURVEY.md §2.3 J4-J9, §2.4 G1-G8).
 
-The expensive pieces — transitive closure and connected components —
-are driver-side fixpoint loops over DataFrame joins with
+The expensive pieces — connected components, and the transitive
+closure of an edge set too large for one broadcast pass — are
+driver-side fixpoint loops over DataFrame joins with
 ``localCheckpoint()`` per iteration to cut lineage (SURVEY §4.3): the
 distributed replacement for the reference's recursive Python DFS
 (/root/reference/src/utils/spreadsheet_loader.py:980-1024).
@@ -158,9 +159,22 @@ class ClosureNotConverged(RuntimeError):
     64-iteration cap lost 37 deep pairs at sf0.1)."""
 
 
-# Broadcast the doubling frontier only while it is provably small; a
-# frontier row is (p, c, dist) = 3 longs, so 1M rows is ~40 MB framed —
-# comfortably under the 8 GB broadcast cap with headroom for executors.
+# The closure's size rule, on the count of distinct input edges: below it
+# the edge set is collected and walked in one broadcast pass; at or above
+# it the doubling loop runs, and broadcasts its frontier only while the
+# frontier is under the same bound (a frontier row is (p, c, dist), 3
+# longs: ~40 MB framed at 1M rows).
+#
+# For the broadcast pass the bound is a memory cap, not a speed
+# crossover: the driver collects the edges as Arrow and builds per-node
+# Python adjacency lists, and every Python worker unpickles its own copy
+# of them plus the label array. Measured on 4 cores
+# (BENCH_closure_bound.json): the pass beat doubling on every input up to
+# 2.4M edges (1.7-14x), while the driver's Python process peaked at
+# 0.47 GB at 1.1M edges and 0.76 GB at 2.4M, and the four workers at
+# 1.24 and 1.88 GB together. The doubling loop is kept for edge sets too
+# large to copy into every worker; where between 2.4M edges and that
+# limit the cap is best set is unmeasured.
 CLOSURE_BROADCAST_MAX_ROWS = int(
     __import__("os").environ.get("KGFORGE_CLOSURE_BCAST_ROWS", "1000000")
 )
@@ -170,11 +184,170 @@ CLOSURE_BROADCAST_MAX_ROWS = int(
 def transitive_closure(
     edges: DataFrame, max_iterations: int = 24, stats: dict | None = None
 ) -> DataFrame:
-    """G4: all reachable (ancestor, descendant) pairs — **exact-prefix**
-    delta path-doubling: covered path lengths double each round
-    (convergence in ceil(log2(diameter)) iterations), and each round
-    joins only the pairs at shortest distance *exactly* 2^k against the
-    closure.
+    """G4: all reachable (ancestor, descendant) pairs, by one of two
+    arms chosen from the number of distinct edges, which the castability
+    probe below counts anyway:
+
+    - below :data:`CLOSURE_BROADCAST_MAX_ROWS`
+      (:func:`_closure_broadcast`): the edge set is collected once, its
+      adjacency broadcast, and every source's reachable set walked in one
+      Arrow-batched Python pass over ``defaultParallelism`` source
+      slices — a fixed handful of jobs, where the loop pays several jobs
+      per round (a 24-deep BOM: 5 rounds, 41 jobs);
+    - at or above it (:func:`_closure_doubling`): exact-prefix delta
+      path doubling over dense long ids, ceil(log2(diameter)) rounds of
+      distributed joins, for edge sets too large to hold on the driver.
+
+    Both arms have the reference DFS's semantics (:980-1024), pinned
+    against each other by tests: every (ancestor, descendant) pair with a
+    path of >= 1 edge; cycles converge, and a node on a cycle gets its
+    self-pair (A->B->A yields (A,A)). Pairs are oriented (parent, child);
+    the partOfAssembly triple emitter flips them. Edges with a NULL
+    endpoint are preserved as pairs and a NULL child propagates to its
+    ancestors, but NULL never joins through — exactly the old
+    string-keyed equi-join behavior. Output column types equal the
+    input's.
+
+    ``stats`` (optional dict) records the arm taken as ``variant``
+    (``"broadcast"`` or ``"doubling"``), ``rounds`` (1 for the broadcast
+    pass) and ``delta_sizes``, the new pairs per round
+    (``len(delta_sizes) == rounds``), for scale-curve evidence
+    (scripts/closure_scale_curve.py). Costs one count per round; leave
+    None in production.
+    """
+    spark = edges.sparkSession
+    with _constraint_propagation_off(spark):
+        # lazy: the castability probe just below is the materializing
+        # action — checkpoint + probe are one job
+        base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=False)
+
+        # Encode node labels as longs for the doubling loop (guide §2.3
+        # narrower types). Fast path: when every non-null label
+        # round-trips exactly through a bigint cast (string(bigint(x)) ==
+        # x — checked in ONE aggregate over the materialized base), the
+        # encoding is a pure cast projection and the decode a cast back.
+        def _bad(col: str):
+            c = F.col(col)
+            rt = c.try_cast("bigint").cast("string")  # try_cast: ANSI-safe probe
+            return F.max(
+                F.when(c.isNotNull() & (rt.isNull() | (rt != c)), F.lit(1)).otherwise(0)
+            )
+
+        # the probe agg also carries count(*), the size rule's input and
+        # the castable loop's entry count
+        chk = base.agg(
+            _bad("parent").alias("bp"), _bad("child").alias("bc"), F.count("*").alias("n")
+        ).first()
+    n_base = int(chk["n"] or 0)
+    if n_base < CLOSURE_BROADCAST_MAX_ROWS:
+        closure = _closure_broadcast(base, edges.schema)
+        if stats is not None:
+            stats.update(variant="broadcast", rounds=1, delta_sizes=[closure.count()])
+        return closure
+    if stats is not None:
+        stats["variant"] = "doubling"
+    castable = (chk["bp"] or 0) == 0 and (chk["bc"] or 0) == 0
+    return _closure_doubling(base, castable, n_base, edges.schema, max_iterations, stats)
+
+
+def _closure_broadcast(base: DataFrame, schema) -> DataFrame:
+    """Closure of a driver-sized edge set in one pass. ``base`` is the
+    deduplicated (parent, child) frame, already materialized.
+
+    The edges are collected once as Arrow and dictionary-encoded to dense
+    ids on the driver; the adjacency lists and the id -> label array are
+    broadcast (the small side replicated to every worker, as a broadcast
+    hash join does). One ``mapInArrow`` task per ``defaultParallelism``
+    slice walks the sources of its slice (every ``n_slices``-th source,
+    so deep and shallow roots spread over the tasks) depth-first and
+    decodes the pairs back to the input's own Arrow labels — no cast
+    round trip, so the output types equal the input's, a bigint column
+    holding NULLs included. Each task yields its pairs in batches of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
+
+    NULL: a walk starts from every node with out-edges, NULL included,
+    and emits a NULL it reaches, but never walks on from a NULL it
+    reached — the doubling arm's NULL-never-joins semantics. Each source
+    marks what it reached with its own id, so a pair is emitted once and
+    a cycle back to the source yields its self-pair.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructType
+
+    spark = base.sparkSession
+    tbl = base.toArrow()
+    parent = tbl.column("parent").combine_chunks()
+    child = tbl.column("child").combine_chunks()
+    nodes = pc.unique(pa.concat_arrays([parent, child]))
+    p = pc.index_in(parent, value_set=nodes, skip_nulls=False).to_numpy()
+    c = pc.index_in(child, value_set=nodes, skip_nulls=False).to_numpy()
+    null_ids = np.flatnonzero(nodes.is_null().to_numpy(zero_copy_only=False))
+    null_id = int(null_ids[0]) if len(null_ids) else -1
+    # CSR by parent, as per-node Python lists: the walk indexes them per
+    # visited node, where numpy scalar indexing would cost more than the
+    # visit itself
+    out_degree = np.bincount(p, minlength=len(nodes))
+    bounds = np.concatenate(([0], np.cumsum(out_degree))).tolist()
+    flat = c[np.argsort(p, kind="stable")].tolist()
+    adj = [flat[bounds[i] : bounds[i + 1]] for i in range(len(nodes))]
+    sources = np.flatnonzero(out_degree).tolist()
+    shared = spark.sparkContext.broadcast((adj, sources, null_id, nodes))
+    n_slices = spark.sparkContext.defaultParallelism
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if batch <= 0:  # the conf's "unlimited"; the walk still bounds its batches
+        batch = 10_000
+
+    def walk(slices):
+        adj, sources, null_id, nodes = shared.value
+
+        def emit(ps, cs):
+            return pa.RecordBatch.from_arrays(
+                [nodes.take(pa.array(ps, pa.int64())), nodes.take(pa.array(cs, pa.int64()))],
+                names=["parent", "child"],
+            )
+
+        mark = [-1] * len(adj)
+        ps: list[int] = []
+        cs: list[int] = []
+        for ids in slices:
+            for i in ids.column(0).to_pylist():
+                for s in sources[i::n_slices]:
+                    n0 = len(cs)
+                    todo = list(adj[s])
+                    while todo:
+                        v = todo.pop()
+                        if mark[v] != s:
+                            mark[v] = s
+                            cs.append(v)
+                            if v != null_id:
+                                todo.extend(adj[v])
+                    ps.extend([s] * (len(cs) - n0))
+                    while len(cs) >= batch:
+                        yield emit(ps[:batch], cs[:batch])
+                        del ps[:batch], cs[:batch]
+        if cs:
+            yield emit(ps, cs)
+
+    out_schema = StructType([schema["parent"], schema["child"]])
+    return spark.range(n_slices, numPartitions=n_slices).mapInArrow(walk, out_schema)
+
+
+def _closure_doubling(
+    base: DataFrame,
+    castable: bool,
+    n_base: int,
+    schema,
+    max_iterations: int,
+    stats: dict | None,
+) -> DataFrame:
+    """Closure of an edge set at or above the size bound —
+    **exact-prefix** delta path-doubling: covered path lengths double
+    each round (convergence in ceil(log2(diameter)) iterations), and each
+    round joins only the pairs at shortest distance *exactly* 2^k against
+    the closure. ``base`` is the deduplicated, materialized edge frame;
+    ``castable`` says every label round-trips through bigint.
 
     Correctness: let C_k = pairs at shortest distance <= 2^k and
     X_k = pairs at distance exactly 2^k. A shortest path of length
@@ -194,9 +367,10 @@ def transitive_closure(
 
     Loop hygiene (measured, same round-6 pass):
 
-    - node ids: endpoints are dictionary-encoded to dense longs before
-      the loop and decoded after (guide §2.3 "narrower types" — string
-      join keys were the per-row constant everywhere in the loop);
+    - node ids: endpoints are encoded to dense longs before the loop and
+      decoded after (guide §2.3 "narrower types" — string join keys were
+      the per-row constant everywhere in the loop): a cast when
+      ``castable``, else a dictionary via monotonically_increasing_id;
     - the frontier X_k is tiny relative to the closure (the exact-2^k
       distance class), so while its measured count stays under
       :data:`CLOSURE_BROADCAST_MAX_ROWS` it is broadcast and the
@@ -210,52 +384,13 @@ def transitive_closure(
       the anti-join, where runtime coalescing/skew-splitting measured
       faster than the r5 fixed-8-partition/AQE-off configuration.
 
-    Semantics match the reference DFS (:980-1024): every (desc, anc)
-    with a path of >=1 edge; cycles converge (shortest distances are
-    finite and the anti-join keeps the loop monotone); reference
-    self-pairs inside cycles are reproduced naturally (A->B->A yields
-    (A,A)). Pairs are oriented (parent, child) = (ancestor,
-    descendant); the partOfAssembly triple emitter flips them. Edges
-    with a NULL endpoint are preserved as pairs but never join through
-    NULL — exactly the old string-keyed equi-join behavior.
-
-    2^24 path length is unreachable in practice; hitting the cap raises
-    instead of silently truncating (a 64-round semi-naive cap once lost
-    the 37 deepest pairs at sf0.1).
-
-    ``stats`` (optional dict) records the measured loop shape — rounds
-    and per-round delta sizes — for scale-curve evidence
-    (scripts/closure_scale_curve.py). Costs one count per round; leave
-    None in production.
+    The anti-join against the closure keeps the loop monotone, so cycles
+    converge. 2^24 path length is unreachable in practice; hitting the
+    cap raises instead of silently truncating (a 64-round semi-naive cap
+    once lost the 37 deepest pairs at sf0.1).
     """
-    spark = edges.sparkSession
+    spark = base.sparkSession
     with _constraint_propagation_off(spark):
-        # lazy: the castability probe just below is the materializing
-        # action — checkpoint + probe are one job
-        base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=False)
-        # Encode node labels as longs for the loop (guide §2.3 narrower
-        # types). Fast path: when every non-null label round-trips
-        # exactly through a bigint cast (string(bigint(x)) == x —
-        # checked in ONE aggregate over the materialized base), the
-        # encoding is a pure cast projection and the decode a cast
-        # back: no node dictionary, no joins. Otherwise fall back to a
-        # dictionary encode via monotonically_increasing_id (frozen by
-        # the checkpoint), with join strategy picked from the
-        # dictionary's KNOWN size (guide §3.1).
-        def _bad(col: str):
-            c = F.col(col)
-            rt = c.try_cast("bigint").cast("string")  # try_cast: ANSI-safe probe
-            return F.max(
-                F.when(c.isNotNull() & (rt.isNull() | (rt != c)), F.lit(1)).otherwise(0)
-            )
-
-        # the probe agg also carries count(*): |e| == |base| (e is a
-        # projection), so the castable path's loop-entry count is free
-        chk = base.agg(
-            _bad("parent").alias("bp"), _bad("child").alias("bc"), F.count("*").alias("n")
-        ).first()
-        castable = (chk["bp"] or 0) == 0 and (chk["bc"] or 0) == 0
-        n_base = int(chk["n"] or 0)
         if castable:
             null_id = None
             p_dict = c_dict = None
@@ -307,6 +442,7 @@ def transitive_closure(
         # castable: |e| came with the probe agg; dictionary path: this
         # count is e's checkpoint-materializing action (fused)
         n_exact = n_base if castable else e.count()
+        delta_sizes: list[int] = []
         for i in range(max_iterations):
             lhs = (
                 F.broadcast(exact)
@@ -329,10 +465,18 @@ def transitive_closure(
                 .groupBy("p", "c")
                 .agg(F.min("dist").alias("dist"))
             )
+            # null-safe keys: on the cast path a NULL label stays NULL, and
+            # a plain equi-join would re-add its pairs in later rounds.
             # lazy: the frontier count below (or the stats count) is the
             # materializing action — one driver job per round, not two
-            new = grown.join(closure, ["p", "c"], "left_anti").localCheckpoint(eager=False)
-            n_new = new.count() if stats is not None else None
+            seen = F.col("g.p").eqNullSafe(F.col("k.p")) & F.col("g.c").eqNullSafe(F.col("k.c"))
+            new = (
+                grown.alias("g")
+                .join(closure.alias("k"), seen, "left_anti")
+                .localCheckpoint(eager=False)
+            )
+            if stats is not None:
+                delta_sizes.append(new.count())
             closure = closure.unionByName(new)
             # the next frontier is a cheap filter over the delta's
             # checkpoint — no extra materialization needed. Its count
@@ -346,19 +490,16 @@ def transitive_closure(
             if n_exact == 0:
                 if stats is not None:
                     stats["rounds"] = i + 1
-                    if n_new:
-                        stats.setdefault("delta_sizes", []).append(n_new)
+                    stats["delta_sizes"] = delta_sizes
                 break
-            if stats is not None:
-                stats.setdefault("delta_sizes", []).append(n_new)
         else:
             raise ClosureNotConverged(
                 f"no fixpoint after {max_iterations} doubling rounds"
             )
         if castable:
             # decode = cast back to each column's ORIGINAL dtype
-            p_t = edges.schema["parent"].dataType.simpleString()
-            c_t = edges.schema["child"].dataType.simpleString()
+            p_t = schema["parent"].dataType.simpleString()
+            c_t = schema["child"].dataType.simpleString()
             return closure.select(
                 F.col("p").cast(p_t).alias("parent"),
                 F.col("c").cast(c_t).alias("child"),

@@ -164,15 +164,20 @@ def import_workbook(
     """
     from kgforge import sources
 
-    entities = sources.read_excel_parts(spark, excel_path, sheets).cache()
-    if bom_csv:
-        edges = sources.read_bom_csv(spark, bom_csv)
-    else:
-        edges = sources.read_excel_bom_edges(spark, excel_path, sheets)
+    # the four readers share one parse (sources._workbook); the grids are
+    # dropped once they have read them, not kept alive by the memo
+    try:
+        entities = sources.read_excel_parts(spark, excel_path, sheets).cache()
+        if bom_csv:
+            edges = sources.read_bom_csv(spark, bom_csv)
+        else:
+            edges = sources.read_excel_bom_edges(spark, excel_path, sheets)
+        alt = sources.read_excel_alternates(spark, excel_path)
+        desc = sources.read_excel_describe_links(spark, excel_path)
+    finally:
+        sources._last_workbook = None
     edges = edges.cache()
     closure = graph.transitive_closure(edges)
-    alt = sources.read_excel_alternates(spark, excel_path)
-    desc = sources.read_excel_describe_links(spark, excel_path)
     triples = (
         materialize.union_triples(
             materialize.part_triples(entities),

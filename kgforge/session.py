@@ -10,6 +10,7 @@ dictionary on the map side of the linking join.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -131,9 +132,17 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
             .count()
             .count()
         )
+    except Exception:  # warming must never break startup, but must not fail silently
+        # both entry points run Python workers on every call (the
+        # closure's broadcast pass), so a worker setup that cannot run
+        # them should show at session start, not in the middle of a job
+        logging.getLogger(__name__).warning(
+            "Python worker warm-up failed; the first Python UDF job will pay "
+            "worker start-up or fail the same way",
+            exc_info=True,
+        )
+    finally:
         spark.sparkContext.setJobDescription(None)
-    except Exception:  # pragma: no cover — warming must never break startup
-        pass
 
 
 def _touch_batch(v):

@@ -1,10 +1,11 @@
 """Round-6 optimization pins: every operator whose internals changed
 for performance keeps its exact pre-change semantics.
 
-- transitive_closure: exact-prefix doubling + integer node encoding
-  (cast fast path AND dictionary fallback) against the semi-naive
-  reference and hand-built expectations (nulls, cycles, cast-collision
-  labels, dtype preservation);
+- transitive_closure: both arms of its size rule — the broadcast pass
+  and exact-prefix doubling with integer node encoding (cast fast path
+  AND dictionary fallback) — against the semi-naive reference and
+  hand-built expectations (nulls, cycles, cast-collision labels, dtype
+  preservation);
 - minhash_band_keys / lsh_candidate_pairs: row-identical to the r5
   banding formulation (explicitly re-built here);
 - repeated_spans array run-split: equal to the r5 window formulation;
@@ -16,6 +17,8 @@ for performance keeps its exact pre-change semantics.
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +27,7 @@ from pyspark.sql.window import Window
 from kgforge import graph
 from kgforge.datapipe import dedup as dd
 from kgforge.session import spread_scan
+from tests.util import CLOSURE_ARMS, closure_on_arm, pairs
 
 
 def _docs(spark, sf_dir):
@@ -31,15 +35,20 @@ def _docs(spark, sf_dir):
 
 
 # ------------------------------------------------------------ closure
+# Each closure pin runs on both arms of graph.transitive_closure's size
+# rule: the broadcast pass and the doubling loop.
+
+
 def test_closure_null_endpoints_match_legacy_equijoin_semantics(spark):
     """NULL endpoints stay as pairs, propagate as children, and never
     act as join-through nodes — the string equi-join behavior the
-    integer encoding must reproduce exactly."""
+    integer encoding must reproduce exactly, with each pair once."""
     rows = [("a", "b"), ("b", None), (None, "z"), ("x", "a"), (None, None), ("z", "w")]
     df = spark.createDataFrame(rows, "parent string, child string")
-    got = {(r.parent, r.child) for r in graph.transitive_closure(df).collect()}
     want = set(rows) | {("a", None), ("x", "b"), ("x", None), (None, "w")}
-    assert got == want
+    for arm in CLOSURE_ARMS:
+        got = pairs(closure_on_arm(df, arm))
+        assert sorted(got, key=str) == sorted(want, key=str), arm
 
 
 def test_closure_dictionary_fallback_on_cast_colliding_labels(spark):
@@ -47,17 +56,27 @@ def test_closure_dictionary_fallback_on_cast_colliding_labels(spark):
     route such graphs to the dictionary encoding and keep them distinct."""
     rows = [("07", "7"), ("7", "x"), ("a", "07"), ("s", "s")]
     df = spark.createDataFrame(rows, "parent string, child string")
-    got = {(r.parent, r.child) for r in graph.transitive_closure(df).collect()}
     sem = {(r.parent, r.child) for r in graph.transitive_closure_seminaive(df).collect()}
-    assert got == sem
-    assert ("a", "7") in got and ("a", "x") in got  # through 07 -> 7 -> x
+    for arm in CLOSURE_ARMS:
+        got = set(pairs(closure_on_arm(df, arm)))
+        assert got == sem, arm
+        assert ("a", "7") in got and ("a", "x") in got  # through 07 -> 7 -> x
 
 
 def test_closure_preserves_input_dtypes(spark):
     dfi = spark.createDataFrame([(1, 2), (2, 3)], "parent bigint, child bigint")
-    out = graph.transitive_closure(dfi)
-    assert dict(out.dtypes) == {"parent": "bigint", "child": "bigint"}
-    assert sorted(map(tuple, out.collect())) == [(1, 2), (1, 3), (2, 3)]
+    # a bigint NULL endpoint: kept as a pair, propagated as a child, and
+    # still a bigint column on the way out
+    dfn = spark.createDataFrame([(1, 2), (2, None), (None, 1)], "parent bigint, child bigint")
+    for arm in CLOSURE_ARMS:
+        out = closure_on_arm(dfi, arm)
+        assert dict(out.dtypes) == {"parent": "bigint", "child": "bigint"}, arm
+        assert sorted(pairs(out)) == [(1, 2), (1, 3), (2, 3)], arm
+        out = closure_on_arm(dfn, arm)
+        assert dict(out.dtypes) == {"parent": "bigint", "child": "bigint"}, arm
+        assert sorted(pairs(out), key=str) == sorted(
+            [(1, 2), (1, None), (2, None), (None, 1), (None, 2), (None, None)], key=str
+        ), arm
 
 
 def test_closure_exact_prefix_matches_seminaive_on_cycles_and_chains(spark):
@@ -67,13 +86,34 @@ def test_closure_exact_prefix_matches_seminaive_on_cycles_and_chains(spark):
         + [("hub", f"n{i}") for i in range(0, 20, 3)]
     )
     df = spark.createDataFrame(rows, "parent string, child string")
-    stats: dict = {}
-    got = {(r.parent, r.child) for r in graph.transitive_closure(df, stats=stats).collect()}
     sem = {(r.parent, r.child) for r in graph.transitive_closure_seminaive(df).collect()}
-    assert got == sem
+    arm_stats: dict = {}
+    for arm in CLOSURE_ARMS:
+        stats = arm_stats[arm] = {}
+        got = set(pairs(closure_on_arm(df, arm, stats)))
+        assert got == sem, arm
+        assert ("a", "a") in got and ("s", "s") in got
+        assert len(stats["delta_sizes"]) == stats["rounds"], arm
+    # the broadcast pass yields every pair in its one round; the doubling
+    # loop's deltas are the pairs beyond the input edges
+    assert arm_stats["broadcast"]["delta_sizes"] == [len(sem)]
+    assert sum(arm_stats["doubling"]["delta_sizes"]) == len(sem) - len(rows)
     # doubling: ceil(log2(diameter)) rounds, far fewer than the 21-round chain
-    assert 1 <= stats["rounds"] <= 7
-    assert ("a", "a") in got and ("s", "s") in got
+    assert 1 <= arm_stats["doubling"]["rounds"] <= 7
+
+
+def test_closure_arm_follows_edge_count_against_bound(spark, monkeypatch):
+    """The broadcast pass runs strictly below CLOSURE_BROADCAST_MAX_ROWS
+    distinct edges, the doubling loop at or above it; duplicate input
+    rows do not count."""
+    rows = [("a", "b"), ("b", "c"), ("a", "b")]
+    df = spark.createDataFrame(rows, "parent string, child string")
+    for bound, arm in ((3, "broadcast"), (2, "doubling"), (1, "doubling")):
+        monkeypatch.setattr(graph, "CLOSURE_BROADCAST_MAX_ROWS", bound)
+        stats: dict = {}
+        got = set(pairs(graph.transitive_closure(df, stats=stats)))
+        assert stats["variant"] == arm, bound
+        assert got == {("a", "b"), ("b", "c"), ("a", "c")}
 
 
 # ------------------------------------------------------------ minhash
@@ -288,6 +328,21 @@ def test_string_warm_batch_fn_and_warmed_session_run_string_udfs(spark):
         .collect()
     )
     assert sorted(r.n for r in rows) == [1, 5]
+
+
+def test_warm_up_failure_is_logged_not_raised(spark, monkeypatch, caplog):
+    """A failed worker warm-up must not break session start, and must
+    not pass silently either: it logs a warning with the cause."""
+    from kgforge import session
+
+    def no_workers(*args, **kwargs):
+        raise RuntimeError("no python workers")
+
+    monkeypatch.setattr(session, "_WARMED", set())
+    monkeypatch.setattr(spark, "range", no_workers)
+    with caplog.at_level(logging.WARNING, logger="kgforge.session"):
+        session._warm_python_workers(spark, 2)
+    assert "warm-up failed" in caplog.text and "no python workers" in caplog.text
 
 
 # ------------------------------------------------------- cosine fast path

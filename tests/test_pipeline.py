@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgforge import extract, fixtures, graph, linking, resume
+from tests.util import CLOSURE_ARMS, closure_on_arm, pairs, write_xlsx
 
 
 def test_strict_mode_raises(spark, sf_dir):
@@ -340,7 +341,8 @@ def test_cc_star_matches_label_propagation_on_long_chain(spark):
 
 
 def test_closure_variants_agree_with_python_dfs(spark):
-    """Delta path-doubling and semi-naive closures must both equal a
+    """Both arms of transitive_closure (broadcast pass, delta
+    path-doubling) and the semi-naive closure must all equal a
     pure-Python DFS on a graph with a cycle, a diamond, and a chain
     (reference cycle-guard semantics, spreadsheet_loader.py:1002-1005)."""
     edges = [
@@ -363,10 +365,48 @@ def test_closure_variants_agree_with_python_dfs(spark):
             want.add((start, n))
             stack.extend(adj.get(n, []))
     df = spark.createDataFrame(edges, "parent string, child string")
-    doubling = {(r.parent, r.child) for r in graph.transitive_closure(df).collect()}
+    for arm in CLOSURE_ARMS:
+        got = pairs(closure_on_arm(df, arm))
+        assert sorted(got) == sorted(want), arm
     seminaive = {(r.parent, r.child) for r in graph.transitive_closure_seminaive(df).collect()}
-    assert doubling == want
     assert seminaive == want
+
+
+def test_import_workbook_parses_the_workbook_once(spark, tmp_path, monkeypatch):
+    """import_workbook reads one workbook through four readers (parts,
+    BOM levels, alternates, describe links) and parses it once; a
+    rewritten file is parsed afresh. Its hasComponent and partOfAssembly
+    counts follow the BOM sheet's level stack. The parsed grids are
+    released when the import returns."""
+    from kgforge import pipeline, sources, xlsx
+    from kgforge.schema import ONT
+
+    banner = [["Export report"], [], ["Generated by PLM"], []]
+    parts = banner + [["Number", "Name"]] + [[n, f"part {n}"] for n in "ABCDE"]
+    # level stack: A->B, B->C, B->D, A->E, E->C; closure 4 + 2 + 1 pairs
+    bom = banner + [["Level", "Number"], [0, "A"], [1, "B"], [2, "C"], [2, "D"], [1, "E"], [2, "C"]]
+    path = str(tmp_path / "wb.xlsx")
+    parses = []
+    read_workbook = xlsx.read_workbook
+
+    def counted(*args, **kwargs):
+        parses.append(args)
+        return read_workbook(*args, **kwargs)
+
+    monkeypatch.setattr(xlsx, "read_workbook", counted)
+    write_xlsx(path, {"MechanicalPart-Sheet": parts, "BOM-Sheet": bom})
+    stats = pipeline.import_workbook(spark, path)
+    assert len(parses) == 1
+    assert sources._last_workbook is None  # grids not kept past the import
+    assert stats["n_parts"] == 5 and stats["n_edges"] == 5
+    assert stats["per_predicate"][ONT + "partOfAssembly"] == 7
+
+    # E gains a child F: one more edge, two more ancestor pairs (E, A)
+    write_xlsx(path, {"MechanicalPart-Sheet": parts, "BOM-Sheet": bom + [[2, "F"]]})
+    stats = pipeline.import_workbook(spark, path)
+    assert len(parses) == 2
+    assert stats["n_edges"] == 6
+    assert stats["per_predicate"][ONT + "partOfAssembly"] == 9
 
 
 def test_resume_kill_and_rerun(spark, sf_dir, tmp_path):

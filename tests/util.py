@@ -179,3 +179,33 @@ def write_xlsx(path: str, sheets: dict, date1904: bool = False, num_fmts: dict |
         for i, xml in enumerate(sheet_xmls):
             z.writestr(f"xl/worksheets/sheet{i + 1}.xml", xml)
     return path
+
+
+CLOSURE_ARMS = ("broadcast", "doubling")
+
+
+def closure_on_arm(df, arm: str, stats: dict | None = None):
+    """``graph.transitive_closure(df)`` with the size bound set so that
+    ``arm`` runs: one above the distinct edge count for the broadcast
+    pass, equal to it for the doubling loop — which then shuffles its
+    first frontier (the edge set) and broadcasts smaller ones, as on any
+    input at or above the bound. The bound is restored before returning
+    (both arms read it only during the call). Asserts the arm ``stats``
+    reports."""
+    from kgforge import graph
+
+    n = df.select("parent", "child").distinct().count()
+    bound = graph.CLOSURE_BROADCAST_MAX_ROWS
+    graph.CLOSURE_BROADCAST_MAX_ROWS = n + 1 if arm == "broadcast" else n
+    stats = {} if stats is None else stats
+    try:
+        out = graph.transitive_closure(df, stats=stats)
+    finally:
+        graph.CLOSURE_BROADCAST_MAX_ROWS = bound
+    assert stats["variant"] == arm, stats["variant"]
+    return out
+
+
+def pairs(df) -> list[tuple]:
+    """(parent, child) rows of a closure frame, duplicates kept."""
+    return [(r.parent, r.child) for r in df.collect()]
